@@ -255,7 +255,10 @@ def a10_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("a11_catalog_sync", oracle="SELECT * FROM region")
 def a11_catalog_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage + catalog-register + read-back-by-name round trip
-    (catalog.SessionCatalogSync; Glue wiring notes there)."""
+    (catalog.SessionCatalogSync; Glue wiring notes there).  The source
+    is a single-file scan, not a directory at rest, so the sync takes
+    its materializing ``saveAsTable`` path; a staged directory (a13) is
+    registered in place instead."""
     cat = SessionCatalogSync()
     cat.sync_table(load(spark, sf_dir, "region"), "staged_region")
     return cat.read_table(spark, "staged_region")
@@ -304,7 +307,10 @@ def a13_stream_ingest_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFram
     This is the Spark-native equivalent of the reference's
     S3-event->Lambda->Parquet->Glue loop: the file-source checkpoint
     replaces S3 notifications, foreachBatch replaces the Lambda body,
-    saveAsTable/Glue-catalog replaces the Glue sync call. The pipeline
+    and an EXTERNAL table over the staged directory refreshed by
+    ``MSCK REPAIR TABLE`` (the same statements reach Glue through the
+    Hive catalog) replaces the Glue sync call — metadata only, the
+    staged data is never rewritten. The pipeline
     object itself is the public ``pipeline.StagingPipeline``; this query
     drives it end-to-end under the oracle check."""
     from data_lake_staging_engine_spark.pipeline import StagingPipeline

@@ -115,6 +115,7 @@ class StagingPipeline:
         # jars are absent from this deployment even when the user
         # never compacts.
         self._fs_cache: dict[str, object] = {}
+        self._staged_schema: StructType | None = None
         if self.contracts and not rejects_dir:
             raise ValueError(
                 "contracts require a rejects_dir — rejected rows must "
@@ -333,18 +334,22 @@ class StagingPipeline:
         return w.start()
 
     def staged_schema(self) -> StructType:
-        """Schema of the staged table, derived by running the transform
-        over an empty frame of the landing schema.  Read-back must NOT
-        rely on inference: a zero-row drain (empty landing partition —
-        routine at scale) writes no parquet files, and inference over
-        the file-less staged dir throws UNABLE_TO_INFER_SCHEMA
-        (round-9 empty-input audit)."""
-        empty = self.spark.createDataFrame([], self.schema)
-        return (
-            self.transform(empty)
-            .withColumn("_ingest_batch", F.lit(0).cast("long"))
-            .schema
-        )
+        """Schema of the staged table as readers see it (file scans read
+        every column nullable), derived by running the transform over an
+        empty frame of the landing schema.  Read-back must NOT rely on
+        inference: a zero-row drain (empty landing partition — routine
+        at scale) writes no parquet files, and inference over the
+        file-less staged dir throws UNABLE_TO_INFER_SCHEMA (round-9
+        empty-input audit).  The landing schema and the transform are
+        fixed at construction, so it is computed once per instance."""
+        if self._staged_schema is None:
+            empty = self.spark.createDataFrame([], self.schema)
+            self._staged_schema = (
+                self.transform(empty)
+                .withColumn("_ingest_batch", F.lit(0).cast("long"))
+                .schema.toNullable()
+            )
+        return self._staged_schema
 
     def sync(self) -> DataFrame:
         staged = self._staged_view()
