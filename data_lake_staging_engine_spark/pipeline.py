@@ -15,6 +15,12 @@ with ``start()`` leaves a continuous micro-batch loop. The registered
 query ``a13_stream_ingest_foreachbatch`` is this pipeline driven
 end-to-end under the driver's oracle check.
 
+A micro-batch's sinks — one reject sink per contract reason plus the
+staged write — are written as concurrent Spark jobs over the batch,
+persisted once; each sink is its own directory written by a dynamic
+partition overwrite keyed on the batch id, so the writes are
+independent and a replay replaces whichever of them a crash left.
+
 At cluster scale nothing here changes: the file-source checkpoint
 tracks S3 listings, the partitioned append is executor-parallel, and
 the catalog sync is a driver-side metadata call per batch.
@@ -22,11 +28,14 @@ the catalog sync is a driver-side metadata call per batch.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import warnings
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -116,6 +125,12 @@ class StagingPipeline:
         # never compacts.
         self._fs_cache: dict[str, object] = {}
         self._staged_schema: StructType | None = None
+        # Every stage from the landing batch to the staged write is
+        # row-wise (no shuffle): the default transform and every
+        # contract but identity normalization are projections/filters.
+        self._row_wise = transform is None and not self.contracts.get(
+            "identity_keys"
+        )
         if self.contracts and not rejects_dir:
             raise ValueError(
                 "contracts require a rejects_dir — rejected rows must "
@@ -192,45 +207,49 @@ class StagingPipeline:
     def _stage_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         persisted = None
         try:
+            # Every sink of the batch is built first and then written as
+            # concurrent jobs (_run_writes): each sink is its own
+            # directory, so the writes are independent.
+            writes: list[Callable[[], None]] = []
+            reject_obs: dict[str, Observation] = {}
+            # plans the batch, runs no job
+            n_input = batch_df.rdd.getNumPartitions() if self._row_wise else None
             if self.contracts:
                 # One batch feeds up to len(contracts) reject sinks plus
                 # the staging write; persist it once instead of
                 # re-reading (and re-normalizing) the landing files per
-                # sink (ADVICE r10).  The try/finally opens BEFORE any
-                # job over the persisted frame so a failing reject write
-                # (or validate_ingest itself) cannot leak the cache
-                # across micro-batch retries.
+                # sink (ADVICE r10).  The concurrent writes compute it
+                # once too: readers of an uncached block wait on the
+                # BlockManager's lock.  The try/finally opens BEFORE any
+                # job over the persisted frame so a failing write (or
+                # validate_ingest itself) cannot leak the cache across
+                # micro-batch retries.
                 batch_df = persisted = batch_df.persist()
                 rep = validate_ingest(batch_df, **self.contracts)
-                counts: dict[str, int] = {}
                 for reason, frame in rep.rejects().items():
                     self._check_rejects_layout(reason)
-                    # observe() rides the write action below — the per-
+                    # observe() rides the write action — the per-
                     # contract reject count is a metric of the batch,
                     # not a separate count job.
-                    obs = Observation(f"{reason}_b{batch_id}")
-                    frame = frame.observe(obs, F.count(F.lit(1)).alias("n"))
-                    # Idempotent on _batch_id: a micro-batch RETRY after
-                    # a partial failure (one reject sink written,
-                    # staging write failed) replaces that batch's
-                    # partition instead of blind-appending the same
-                    # audit rows twice.
-                    (
-                        frame.withColumn("_batch_id", F.lit(batch_id))
+                    obs = reject_obs[reason] = Observation(f"{reason}_b{batch_id}")
+                    # Idempotent on _batch_id: a RETRY after a partial
+                    # failure replaces that batch's partition instead
+                    # of appending the same audit rows twice.
+                    sink = (
+                        frame.observe(obs, F.count(F.lit(1)).alias("n"))
+                        .withColumn("_batch_id", F.lit(batch_id))
                         .write.mode("overwrite")
                         .option("partitionOverwriteMode", "dynamic")
                         .partitionBy("_batch_id")
-                        .parquet(f"{self.rejects_dir}/{reason}")
                     )
-                    counts[reason] = obs.get["n"]
-                self.reject_metrics[batch_id] = counts
-                while len(self.reject_metrics) > self.REJECT_METRICS_KEEP:
-                    self.reject_metrics.pop(next(iter(self.reject_metrics)))
+                    writes.append(
+                        functools.partial(sink.parquet, f"{self.rejects_dir}/{reason}")
+                    )
                 batch_df = rep.clean
             out = self.transform(batch_df).withColumn(
                 "_ingest_batch", F.lit(batch_id).cast("long")
             )
-            # Caller observations ride the staging write below — the
+            # Caller observations ride the staging write — the
             # CollectMetrics node adds no job, no shuffle, no second
             # scan of the batch.
             obs_handles: dict[str, Observation] = {}
@@ -238,40 +257,75 @@ class StagingPipeline:
                 ob = Observation(f"{oname}_b{batch_id}")
                 out = out.observe(ob, *exprs)
                 obs_handles[oname] = ob
+            # One file per (date, batch) leaf, not tasks x dirs (the
+            # small-files guard): a task writes each leaf it holds as
+            # one file, so a one-partition batch through row-wise
+            # stages already has one; any other batch is repartitioned
+            # by date so each leaf sits in exactly one task.
+            if n_input != 1:
+                out = out.repartition(*self.partition_cols)
             # Idempotent per batch: the batch id is a partition column
             # and the write is a DYNAMIC partition overwrite, so a
-            # replayed micro-batch (kill after a partial parquet append
-            # but before the checkpoint commit — the failure mode plain
-            # blind-append cannot survive) REPLACES its own
+            # replayed micro-batch (kill after a partial write but
+            # before the checkpoint commit) REPLACES its own
             # (date..., _ingest_batch) leaves and touches nothing else.
             # Replays rewrite identical data: the file source pins a
             # batch's file set in the offsets WAL before running it,
-            # and the transform is deterministic.  Exactly-once on
-            # plain parquet costs one subdir per (date, batch) —
-            # compact_staged folds them; a transactional table format
-            # (Delta/Iceberg) replaces this dance with a real commit
-            # protocol.
-            # repartition keeps one task per output date => one file
-            # per (date, batch) leaf, not tasks x dirs (the
-            # small-files guard).
-            (
-                out.repartition(*self.partition_cols)
-                .write.mode("overwrite")
+            # and the transform is deterministic.  compact_staged folds
+            # the per-batch leaves; a transactional table format
+            # (Delta/Iceberg) replaces this with a real commit protocol.
+            staged = (
+                out.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy(*self.partition_cols, "_ingest_batch")
-                .parquet(self.staged_dir)
             )
+            writes.append(functools.partial(staged.parquet, self.staged_dir))
+            self._run_writes(writes)
+            # Counts are recorded only once every write of the batch
+            # succeeded; a failed batch's replay records them.
+            if self.contracts:
+                self._keep(
+                    self.reject_metrics,
+                    batch_id,
+                    {r: o.get["n"] for r, o in reject_obs.items()},
+                )
             if obs_handles:
-                self.batch_observations[batch_id] = {
-                    n: dict(ob.get) for n, ob in obs_handles.items()
-                }
-                while len(self.batch_observations) > self.REJECT_METRICS_KEEP:
-                    self.batch_observations.pop(
-                        next(iter(self.batch_observations))
-                    )
+                self._keep(
+                    self.batch_observations,
+                    batch_id,
+                    {n: dict(ob.get) for n, ob in obs_handles.items()},
+                )
         finally:
             if persisted is not None:
                 persisted.unpersist()
+
+    def _run_writes(self, writes: list[Callable[[], None]]) -> None:
+        """Run a batch's sink writes as concurrent Spark jobs; a single
+        write runs inline.
+
+        Each write runs under ``inheritable_thread_target(self.spark)``,
+        which copies the stream thread's local properties — the job
+        group ``query.stop()`` cancels and the SQL execution the writes
+        nest under.  It is called once per write: each call clones the
+        properties, so no two threads share one mutable copy.  Every
+        future is waited for before the first error is raised, so the
+        caller's ``unpersist`` never races a write still running.
+        """
+        if len(writes) == 1:
+            writes[0]()
+            return
+        with ThreadPoolExecutor(len(writes)) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(w)) for w in writes
+            ]
+        for f in futures:
+            f.result()
+
+    def _keep(self, store: dict, batch_id: int, value) -> None:
+        """Record a batch's metrics, keeping the most recent window."""
+        store[batch_id] = value
+        while len(store) > self.REJECT_METRICS_KEEP:
+            store.pop(next(iter(store)))
 
     def _restore_precompact(self) -> None:
         """Heal the compact_staged crash window (kill between its two
